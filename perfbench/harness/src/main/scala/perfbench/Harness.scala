@@ -1,10 +1,14 @@
 package perfbench
 
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.Bench
 import graft.bench.Pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.lang.management.ManagementFactory
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 
 /** One benchmark process: a closed loop with one client that runs a
@@ -13,10 +17,11 @@ import scala.collection.mutable
   * Usage: `perfbench.Harness --workload W --pipelines P1,P2,..
   * --staging S1,.. --sf DIR --cpus N --seconds S --trace 0|1 --out FILE`.
   * The pipelines are `Bench.entries` names and the staging calls
-  * `Pipelines.stage*` names. After set-up comes a cold pass that also
-  * checks the outputs, then the timed passes (and, with `--trace 1`,
-  * the traced passes). The report is written to FILE
-  * as one JSON object, which `perfbench/run.py` turns into metrics.
+  * `Pipelines.stage*` names. After set-up comes the cold pass, whose
+  * outputs are also checked outside its timed phases, then the timed
+  * passes (and, with `--trace 1`, the traced passes). The report is
+  * written to FILE as one JSON object, which `perfbench/run.py` turns
+  * into metrics.
   */
 object Harness {
 
@@ -62,7 +67,7 @@ object Harness {
       }
       stageS(call) = secondsSince(t0)
     }
-    val setup = Json.obj("session_s" -> sessionS, "stage_s" -> stageS,
+    val setup = ListMap("session_s" -> sessionS, "stage_s" -> stageS,
       "setup_s" -> (sessionS + stageS.values.sum))
 
     val byName = Bench.entries(spark, sf, stagedDirs("stageLoanCsv"),
@@ -99,7 +104,7 @@ object Harness {
     } else None
     if (trace.isEmpty) spark.stop()
 
-    writeReport(out, Json.obj(
+    writeReport(out, ListMap(
       "workload" -> workloadName,
       "cpus" -> cpus.toInt,
       "heap_max_mb" -> Runtime.getRuntime.maxMemory / 1048576.0,
@@ -110,8 +115,8 @@ object Harness {
       "traced" -> trace.toSeq.flatMap(_._1).map(passJson),
       "heap_peak_mb" -> heapPeakMb,
       "trace" -> trace.map { case (passes, after, tracer) =>
-        TraceReport(setup, Seq(cold), timed ++ after, passes, tracer.result(), cpus.toInt,
-          heapPeakMb)
+        TraceReport(setup, stageS.values.sum, Seq(cold), timed ++ after, passes,
+          tracer.result(), cpus.toInt, heapPeakMb)
       }))
   }
 
@@ -120,13 +125,22 @@ object Harness {
   private def describe(e: Throwable): String =
     s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}"
 
-  def passJson(p: Pass): Json.Obj = Json.obj(
+  def passJson(p: Pass): ListMap[String, Any] = ListMap(
     "tag" -> p.tag, "wall_s" -> p.wallS,
-    "pipelines" -> p.timings.map(t => Json.obj("name" -> t.name, "build_s" -> t.buildS,
+    "pipelines" -> p.timings.map(t => ListMap("name" -> t.name, "build_s" -> t.buildS,
       "terminal_s" -> t.terminalS, "ok" -> t.ok, "error" -> t.error)))
 
-  private def writeReport(path: String, report: Json.Obj): Unit =
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), Json.render(report) + "\n")
+  /** Renders maps (in their iteration order), sequences and options;
+    * a non-finite double is written as a bare `NaN`, which Python's
+    * `json` reads as a float.
+    */
+  val mapper: JsonMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .disable(JsonWriteFeature.WRITE_NAN_AS_STRINGS)
+    .build()
+
+  private def writeReport(path: String, report: ListMap[String, Any]): Unit =
+    mapper.writeValue(new java.io.File(path), report)
 
   /** Runs passes over the workload's entries, labelling each phase with
     * the span property the tracer attributes work by.
@@ -182,21 +196,24 @@ object Harness {
       out.toSeq
     }
 
-    /** The cold pass, run to a digest terminal so that it doubles as
-      * the output check; the exact and approximate top-k rungs are also
-      * collected (untimed) to score recall.
+    /** The cold pass, run to the `noop` terminal like the timed passes.
+      * After each pipeline's terminal, outside the timed phases, its
+      * frame is run again to a digest for the output check, and the
+      * exact and approximate top-k rungs are collected to score recall.
       */
-    def checkPass(recall: Boolean): (Pass, Json.Obj) = {
+    def checkPass(recall: Boolean): (Pass, ListMap[String, Any]) = {
       val digests = mutable.Map.empty[String, Digest.Result]
       val neighbors = mutable.Map.empty[String, Map[Long, Set[Long]]]
-      val p = pass("cold", (name, df) => digests(name) = Digest.of(df), (name, df) =>
+      val p = pass("cold", (_, df) => noop(df), { (name, df) =>
+        digests(name) = Digest.of(df)
         if (recall && (name == ExactRung || ApproxRungs.contains(name)))
           neighbors(name) = df.select("query_id", "neighbor_id").collect()
-            .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet })
-      val checks = Json.Obj(p.timings.map { t =>
+            .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+      })
+      val checks = ListMap.from(p.timings.map { t =>
         t.name -> digests.get(t.name).filter(_ => t.ok)
-          .map(d => Json.obj("ok" -> true, "rows" -> d.rows, "digest" -> d.digest))
-          .getOrElse(Json.obj("ok" -> false, "error" -> t.error))
+          .map(d => ListMap("ok" -> true, "rows" -> d.rows, "digest" -> d.digest))
+          .getOrElse(ListMap("ok" -> false, "error" -> t.error))
       })
       val recallAt10 = neighbors.get(ExactRung).map { exact =>
         val perRung = ApproxRungs.flatMap(neighbors.get).map { got =>
@@ -206,7 +223,7 @@ object Harness {
         }
         if (perRung.length == ApproxRungs.length) perRung.sum / perRung.length else Double.NaN
       }
-      (p, Json.obj("pipelines" -> checks, "recall_scored" -> recall,
+      (p, ListMap("pipelines" -> checks, "recall_scored" -> recall,
         "recall_at_10" -> recallAt10))
     }
   }

@@ -2,6 +2,8 @@ package perfbench
 
 import perfbench.Harness.Pass
 
+import scala.collection.immutable.ListMap
+
 /** Turns a traced run into the per-layer metrics, the span tree and
   * the final-plan census per pipeline.
   *
@@ -107,9 +109,9 @@ object TraceReport {
   /** Names of the metrics computed from traced passes. */
   val layerNames: Seq[String] = layerMetrics(new SpanCounters, 1.0, 1).map(_._1)
 
-  private def censusJson(c: SpanCounters): Json.Obj = {
+  private def censusJson(c: SpanCounters): ListMap[String, Any] = {
     val cs = c.census
-    Json.obj("exchanges" -> cs.exchanges, "reused_exchanges" -> cs.reusedExchanges,
+    ListMap("exchanges" -> cs.exchanges, "reused_exchanges" -> cs.reusedExchanges,
       "broadcasts" -> cs.broadcasts, "object_serde" -> cs.objectSerde,
       "object_aggs" -> cs.objectAggs, "nested_loop_joins" -> cs.nestedLoopJoins,
       "operators" -> cs.operators, "codegen_operators" -> cs.codegenOperators,
@@ -118,12 +120,13 @@ object TraceReport {
       "jobs" -> c.jobs, "stages" -> c.stages, "tasks" -> c.tasks,
       "task_s" -> c.taskMs / 1000.0,
       "modules" -> c.moduleJobs.toSeq.sorted.map { case (m, n) =>
-        Json.obj("module" -> m, "jobs" -> n, "task_s" -> c.moduleTaskMs(m) / 1000.0)
+        ListMap("module" -> m, "jobs" -> n, "task_s" -> c.moduleTaskMs(m) / 1000.0)
       })
   }
 
-  def apply(setup: Json.Obj, untimed: Seq[Pass], timed: Seq[Pass], traced: Seq[Pass],
-            spans: Map[String, SpanCounters], cores: Int, heapPeakMb: Double): Json.Obj = {
+  def apply(setup: ListMap[String, Any], stageS: Double, untimed: Seq[Pass], timed: Seq[Pass],
+            traced: Seq[Pass], spans: Map[String, SpanCounters], cores: Int,
+            heapPeakMb: Double): ListMap[String, Any] = {
     def under(prefix: String): Iterable[SpanCounters] =
       spans.collect { case (k, v) if k.startsWith(prefix) => v }
 
@@ -139,9 +142,6 @@ object TraceReport {
       pipelines.map(n => s"bench.${n}_s" -> median(timed.map(_.timings
         .filter(_.name == n).map(t => t.buildS + t.terminalS).sum))) :+
       ("bench.trace_overhead_s" -> (median(traced.map(_.wallS)) - median(timed.map(_.wallS))))
-    val stageS = setup.fields.collectFirst {
-      case ("stage_s", m: scala.collection.Map[_, _]) => m.values.map(_.asInstanceOf[Double]).sum
-    }.getOrElse(0.0)
     val metrics = bench ++ layerNames.map(n => n -> median(perPass.map(_(n)))) :+
       ("core.stage_s" -> stageS) :+
       // old-generation peak after GC over the timed passes; it moves by
@@ -149,25 +149,25 @@ object TraceReport {
       ("spark.heap_peak_mb" -> heapPeakMb)
 
     val last = traced.last
-    def passTree(p: Pass, counted: Boolean): Json.Obj = Json.obj(
+    def passTree(p: Pass, counted: Boolean): ListMap[String, Any] = ListMap(
       "name" -> p.tag, "dur_s" -> p.wallS,
-      "children" -> p.timings.map(t => Json.obj(
+      "children" -> p.timings.map(t => ListMap(
         "name" -> t.name, "dur_s" -> (t.buildS + t.terminalS), "ok" -> t.ok,
         "children" -> Seq("build" -> t.buildS, "terminal" -> t.terminalS).map { case (ph, s) =>
           val counters = if (counted) spans.get(s"${p.tag}/${t.name}/$ph") else None
-          Json.obj("name" -> ph, "dur_s" -> s, "jobs" -> counters.map(_.jobs),
+          ListMap("name" -> ph, "dur_s" -> s, "jobs" -> counters.map(_.jobs),
             "stages" -> counters.map(_.stages), "tasks" -> counters.map(_.tasks),
             "task_s" -> counters.map(_.taskMs / 1000.0))
         })))
-    Json.obj(
-      "metrics" -> Json.Obj(metrics),
+    ListMap(
+      "metrics" -> ListMap.from(metrics),
       "unsteady_counts" -> unsteady,
       "traced_passes" -> traced.length,
-      "per_pass" -> perPass.map(m => Json.Obj(layerNames.map(n => n -> m(n)))),
-      "census" -> Json.Obj(pipelines.map(n =>
-        n -> censusJson(merged(under(s"${last.tag}/$n/")))).toSeq),
-      "spans" -> Json.obj("name" -> "run", "children" ->
-        ((Json.obj("name" -> "setup", "detail" -> setup) +: untimed.map(passTree(_, counted = false))) ++
+      "per_pass" -> perPass.map(m => ListMap.from(layerNames.map(n => n -> m(n)))),
+      "census" -> ListMap.from(pipelines.map(n =>
+        n -> censusJson(merged(under(s"${last.tag}/$n/"))))),
+      "spans" -> ListMap("name" -> "run", "children" ->
+        ((ListMap("name" -> "setup", "detail" -> setup) +: untimed.map(passTree(_, counted = false))) ++
           timed.map(passTree(_, counted = false)) ++ traced.map(passTree(_, counted = true)))),
       "unattributed" -> spans.get(Tracer.Unspanned).map(censusJson))
   }

@@ -3,6 +3,8 @@ package perfbench
 import org.scalatest.funsuite.AnyFunSuite
 import perfbench.Harness.{Pass, Timing}
 
+import scala.collection.immutable.ListMap
+
 class TraceReportSpec extends AnyFunSuite {
 
   private def pass(tag: String, wall: Double) = Pass(tag, wall, Seq(
@@ -18,14 +20,14 @@ class TraceReportSpec extends AnyFunSuite {
     c
   }
 
-  private def report(secondJobs: Long) = TraceReport(Json.obj("stage_s" -> Map("s" -> 1.5)),
+  private def report(secondJobs: Long) = TraceReport(ListMap("stage_s" -> Map("s" -> 1.5)), 1.5,
     Seq(pass("cold", 4.0)), Seq(pass("t1", 2.0)), Seq(pass("x2", 2.2), pass("x3", 2.4)),
     Map("x2/a/build" -> counters(2, 1000, (0L, 500L), (400L, 900L)),
       "x2/b/terminal" -> counters(1, 3000, (2000L, 2100L)),
       "x3/a/build" -> counters(secondJobs, 1000, (0L, 1000L))), cores = 4, heapPeakMb = 640.0)
 
-  private def metrics(r: Json.Obj): Map[String, Any] =
-    r.fields.collectFirst { case ("metrics", Json.Obj(m)) => m.toMap }.get
+  private def metrics(r: ListMap[String, Any]): Map[String, Any] =
+    r("metrics").asInstanceOf[Map[String, Any]]
 
   test("per-layer metrics are medians over traced passes, bench times from timed passes") {
     val m = metrics(report(3))
@@ -42,11 +44,18 @@ class TraceReportSpec extends AnyFunSuite {
   }
 
   test("a count that differs between traced passes is named") {
-    val unsteady = report(7).fields.collectFirst { case ("unsteady_counts", u: Seq[_]) => u }.get
+    val unsteady = report(7)("unsteady_counts").asInstanceOf[Seq[String]]
     assert(unsteady.contains("spark.jobs"))
     assert(!unsteady.contains("spark.task_s"))
-    val steady = report(3).fields.collectFirst { case ("unsteady_counts", u: Seq[_]) => u }.get
+    val steady = report(3)("unsteady_counts").asInstanceOf[Seq[String]]
     assert(steady.isEmpty)
+  }
+
+  test("the report renders as JSON with fields in order and NaN as a bare token") {
+    val text = Harness.mapper.writeValueAsString(
+      ListMap("b" -> Seq(1, 2), "a" -> ListMap("x" -> None, "y" -> Some(Double.NaN))))
+    assert(text == "{\"b\":[1,2],\"a\":{\"x\":null,\"y\":NaN}}")
+    assert(Harness.mapper.writeValueAsString(report(3)).contains("\"spark.jobs\":3.0"))
   }
 
   test("union of job intervals") {

@@ -17,7 +17,7 @@ import pyarrow.parquet as pq
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
-VERSION = 1
+VERSION = 2
 
 # text_curation: documents multiplied like the core-scaling probe does it
 DOC_COPIES = 8
@@ -57,8 +57,9 @@ PIPELINE_TABLES = {
 }
 
 WORKLOADS = {
-    "tabular_etl": ["etl_with_sink", "dedup_window", "dedup_exact", "q1_agg", "q5_join",
-                    "join_agg", "range_join", "asof_join", "stream_rollup", "ml_prep_fit"],
+    "tabular_etl": ["etl_with_sink", "dedup_window", "dedup_exact", "dedup_groups", "q1_agg",
+                    "q5_join", "join_agg", "range_join", "asof_join", "stream_rollup",
+                    "ml_prep_fit"],
     "text_curation": ["curation_cascade", "dedup_groups", "dup_span_strip",
                       "repetition_cut", "bpe_tokenize", "packed_export"],
     "retrieval": ["embedding_cascade", "kmeans_train", "ann_topk", "ann_int8", "ann_pq",

@@ -5,9 +5,10 @@ Usage (from the repository root):
 
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
-It builds the engine and the harness from source on first use (into
-`.bench_build/`), generates the workload's inputs from the sf0.1
-fixture with the seed (once per seed, outside the measured processes),
+It builds the engine and the harness from source (into `.bench_build/`)
+whenever their sources differ from the last build in this checkout,
+generates the workload's inputs from the sf0.1 fixture with the seed
+(once per seed, outside the measured processes),
 runs the harness JVMs, checks every pipeline's output against the
 recorded goldens, and prints one JSON object as the last line of
 stdout. With `--trace 0` it carries the end-to-end metrics; with
@@ -19,7 +20,9 @@ The fixture directory is `$SPARK_GRAFT_SF_DIR` when set, else the sf0.1
 directory that TESTDATA.md lists.
 """
 import argparse
+import hashlib
 import json
+import math
 import os
 import re
 import shutil
@@ -102,14 +105,49 @@ def sbt_env(root):
     return env
 
 
+# Sources the build reads: a change to any of them rebuilds (sbt's
+# incremental compile) before the next run.
+BUILD_INPUTS = ["build.sbt", "project", os.path.join("src", "main"),
+                os.path.join(HARNESS, "build.sbt"), os.path.join(HARNESS, "project"),
+                os.path.join(HARNESS, "src", "main")]
+
+
+def build_files(root):
+    """The build input files, as sorted paths relative to `root`."""
+    out = []
+    for top in BUILD_INPUTS:
+        path = os.path.join(root, top)
+        if os.path.isfile(path):
+            out.append(top)
+        for d, dirs, files in os.walk(path):
+            # sbt's own output under project/ is not an input
+            dirs[:] = [x for x in dirs if x != "target"]
+            out += [os.path.relpath(os.path.join(d, f), root) for f in files]
+    return sorted(out)
+
+
+def source_hash(root):
+    """SHA-256 over the path and content of every build input file."""
+    h = hashlib.sha256()
+    for rel in build_files(root):
+        h.update(rel.encode() + b"\0")
+        with open(os.path.join(root, rel), "rb") as f:
+            h.update(f.read())
+        h.update(b"\0")
+    return h.hexdigest()
+
+
 def build(root):
-    """Compile the engine and the harness once per checkout; returns the
-    runtime classpath and the engine build's JVM options."""
+    """Compile the engine and the harness when their sources changed
+    since the last build in this checkout; returns the runtime classpath
+    and the engine build's JVM options."""
     done = os.path.join(root, BUILD, "build.json")
+    digest = source_hash(root)
     if os.path.exists(done):
         with open(done) as f:
             b = json.load(f)
-        return b["classpath"], b["java_options"]
+        if b.get("sources") == digest:
+            return b["classpath"], b["java_options"]
     os.makedirs(os.path.join(root, BUILD, "tmp"), exist_ok=True)
     log("building engine and harness")
     t0 = time.time()
@@ -131,7 +169,7 @@ def build(root):
     # the heap is set per run (driver_mem), not by the build
     opts = [o for o in opts if not o.startswith("-Xmx")]
     with open(done, "w") as f:
-        json.dump({"classpath": cp, "java_options": opts}, f)
+        json.dump({"sources": digest, "classpath": cp, "java_options": opts}, f)
     log(f"built in {time.time() - t0:.0f} s")
     return cp, opts
 
@@ -196,10 +234,10 @@ def end_to_end(main, manifest, bad):
     pass_s = statistics.median(timed)
     later = main["timed"] + main.get("traced", [])
     attempted = len(main["cold"]["pipelines"]) + sum(len(p["pipelines"]) for p in later)
-    # the cold pass is the check pass: its failures are all in `bad`
+    # the cold pass is the checked pass: its failures are all in `bad`
     failed = len(bad) + sum(1 for p in later for t in p["pipelines"] if not t["ok"])
     recall = main["check"]["recall_at_10"]
-    if recall is None:
+    if recall is None or math.isnan(recall):
         # unscored: a workload without top-k rungs returns exact results;
         # rungs that failed found nothing
         recall = 0.0 if main["check"]["recall_scored"] else 1.0
@@ -286,7 +324,7 @@ def result(attempted, failed, values, units, default=None):
     metrics = {}
     for name, unit in units.items():
         value = values.get(name, default)
-        if value is None:
+        if value is None or math.isnan(value):
             fail(f"metric {name} was not measured")
         metrics[name] = {"value": value, "unit": unit}
     return {"correct": failed == 0, "attempted": attempted, "failed": failed,

@@ -5,6 +5,7 @@ Run from the repository root: python3 -m unittest discover -s perfbench/tests
 import json
 import os
 import sys
+import tempfile
 import unittest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -70,10 +71,42 @@ class EndToEndTest(unittest.TestCase):
         self.assertAlmostEqual(e2e["ok_frac"], 0.5)
         self.assertEqual(e2e["recall_at_10"], 1.0)
 
+    def test_unscored_recall_reads_as_exact_or_missing(self):
+        r = report(["a"], recall=float("nan"))
+        self.assertEqual(run.end_to_end(r, {"pass_rows": 1}, {})[2]["recall_at_10"], 0.0)
+        r["check"]["recall_scored"] = False
+        self.assertEqual(run.end_to_end(r, {"pass_rows": 1}, {})[2]["recall_at_10"], 1.0)
+
     def test_per_layer_line_fills_absent_pipelines_with_zero(self):
         line = run.result(1, 0, {"spark.jobs": 3.0}, run.declared("per_layer"), default=0.0)
         self.assertEqual(set(line["metrics"]), {m["name"] for m in BENCH["per_layer"]})
         self.assertEqual(line["metrics"]["spark.jobs"], {"value": 3.0, "unit": "count"})
+
+
+class BuildTest(unittest.TestCase):
+
+    def test_source_hash_follows_build_inputs_only(self):
+        with tempfile.TemporaryDirectory() as root:
+            def write(rel, text):
+                path = os.path.join(root, rel)
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                with open(path, "w") as f:
+                    f.write(text)
+            write("build.sbt", "a")
+            write("src/main/scala/A.scala", "object A")
+            write("project/build.properties", "sbt.version=1")
+            write("project/target/cache", "x")
+            write(os.path.join(run.HARNESS, "src/main/scala/H.scala"), "object H")
+            h = run.source_hash(root)
+            self.assertNotIn("project/target/cache", run.build_files(root))
+            write("project/target/cache", "y")
+            write("README.md", "docs")
+            self.assertEqual(run.source_hash(root), h)
+            write("src/main/scala/A.scala", "object A { }")
+            self.assertNotEqual(run.source_hash(root), h)
+            h = run.source_hash(root)
+            write(os.path.join(run.HARNESS, "src/main/scala/H.scala"), "object H { }")
+            self.assertNotEqual(run.source_hash(root), h)
 
 
 class WorkloadTest(unittest.TestCase):
