@@ -11,8 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  /** Session construction shared with [[graft.bench.PlanDump]] so plan
-    * captures see exactly the bench's conf (AQE, shuffle partitions).
+  /** Session construction shared with [[graft.bench.Probe]] so probe
+    * readings see exactly the bench's conf (AQE, shuffle partitions).
     */
   def session(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
@@ -24,14 +24,14 @@ object Bench {
     .getOrCreate()
 
   /** The headline entry list over pre-staged input dirs — exposed (not
-    * inlined in main) so PlanDump can capture each entry's physical
-    * plan without duplicating the list. Behavior of main() unchanged.
+    * inlined in main) so [[graft.bench.Probe]] and the benchmark harness
+    * run these entries without duplicating the list.
     */
   def entries(spark: SparkSession, sfDir: String, csvDir: String,
               int8Dir: String, indexDir: String,
               ivfAdcDir: String): Seq[(String, () => DataFrame)] = {
     val sinkDir = graft.core.Staging.tmpDir("bench_sink")
-    (Seq(
+    Seq(
       "etl_upstream" -> (() => Pipelines.etlUpstream(spark, csvDir)),
       "etl_with_sink" -> (() => {
         // BASELINE's ETL number includes the load; parquet stands in for
@@ -94,8 +94,8 @@ object Bench {
       "ml_combo_fit" -> (() => Pipelines.mlComboFit(spark, sfDir))) ++
       // the TRUE JDBC load — a single-connection embedded-Derby insert
       // stream, so it mostly measures the database, not the engine;
-      // standing entry (opt-out via SKIP) so BASELINE.md's ETL+MSSQL
-      // row has a driver-recorded counterpart every round. The lambda
+      // standing entry so BASELINE.md's ETL+MSSQL row has a
+      // driver-recorded counterpart every round. The lambda
       // does ETL + load eagerly and returns a 1-row literal: returning
       // the un-materialized ETL frame would make the harness's timed
       // count() run the full ETL a second time.
@@ -114,15 +114,6 @@ object Bench {
               "batchsize" -> "10000"))
           spark.range(1).toDF("ok")
         }))
-      })
-      // debug filters (not used by the driver): ONLY=a,b runs a subset,
-      // SKIP=a,b excludes — for isolating cross-query interference
-      .filter { case (name, _) =>
-        val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-          .map(_.split(",").toSet)
-        val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-          .map(_.split(",").toSet).getOrElse(Set.empty)
-        only.forall(_.contains(name)) && !skip.contains(name)
       }
   }
 

@@ -20,8 +20,8 @@ object AppUtil {
   def session(): SparkSession = Sessions.local()
   def sfDir(args: Array[String]): String =
     args.headOption.getOrElse("/root/testdata/sf0.001")
-  def printReports(rs: Seq[Runner.StageReport]): Unit =
-    rs.foreach(r => println(f"[stage] ${r.stage}%-24s ${r.seconds}%7.2f s  rows=${r.rows.map(_.toString).getOrElse("-")}"))
+  def printCounts(run: Runner.ObservedRun): Unit =
+    run.counts.foreach { case (n, c) => println(f"[stage] $n%-24s rows=$c") }
 }
 
 /** Run one catalog query by name and print it — the single-operator
@@ -51,24 +51,23 @@ object EtlApp {
     val src = Sources.csv(spark, csvDir, Some(Pipelines.loanSchema))
     println(s"[profile] partitions=${src.rdd.getNumPartitions} cols=${src.columns.length}")
 
-    val result = Runner.run(src, Seq(
+    val run = Runner.runObserved(src, Seq(
       Runner.Stage("dropna", _.na.drop("any")),
       Runner.Stage("cleanse_cast", Cleansers.applyCastPlan(_, Seq(
         Cleansers.ColumnSpec("int_rate", org.apache.spark.sql.types.DoubleType, Cleansers.stripPercent),
         Cleansers.ColumnSpec("term", org.apache.spark.sql.types.DoubleType, c => regexp_replace(c, "months", "")),
         Cleansers.ColumnSpec("earliest_cr_line", org.apache.spark.sql.types.StringType, Cleansers.monthToken)))),
       Runner.Stage("status_filter", _.filter(col("loan_status").isin("F", "O"))),
-      Runner.Stage("dropna_final", _.na.drop("any"))),
-      countCheckpoints = true)
-    AppUtil.printReports(result.reports)
+      Runner.Stage("dropna_final", _.na.drop("any"))))
 
-    // JDBC load + write-then-readback verification (S8→S7)
+    // JDBC load + write-then-readback verification (S8→S7); the load is
+    // the run's one terminal and fills the stage counts
     val db = graft.core.Staging.tmpDir("etl_derby") + "/db"
     val opts = Map("url" -> s"jdbc:derby:$db;create=true",
       "dbtable" -> "loan_clean", "driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    Sinks.jdbc(result.output, opts)
-    val back = Sources.jdbc(spark, opts)
-    val (w, r) = (result.output.count(), back.count())
+    Sinks.jdbc(run.output, opts)
+    AppUtil.printCounts(run)
+    val (w, r) = (run.counts.last._2, Sources.jdbc(spark, opts).count())
     println(s"[verify] wrote=$w readback=$r match=${w == r}")
     require(w == r, "write-then-readback row counts must match")
     spark.stop()

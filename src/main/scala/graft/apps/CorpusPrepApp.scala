@@ -1,89 +1,39 @@
 package graft.apps
 
+import graft.bench.Pipelines
 import graft.core.Tables
-import graft.dedup.{Components, TextDedup}
-import graft.functions.TextAnalysis
 import graft.pipeline.Runner
 import graft.sources.{Sinks, Sources}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** The training-corpus preparation pipeline end-to-end (the engine's
-  * north-star use case, BASELINE.json): JSONL ingest → language filter
-  * → quality floor → exact dedup → MinHash-LSH near-dedup → curated
-  * JSONL + stats. Every stage is one of the engine's gated operators;
-  * this app is the composition a data-curation user actually runs.
-  *
-  * Scale notes: the whole pipeline is two aggregations (exact-dedup
-  * group, minhash signatures) + one band join on a corpus that only
-  * shrinks stage by stage; nothing collects to the driver but the
-  * stage counts.
+  * north-star use case, BASELINE.json): JSONL ingest → the curation
+  * cascade ([[graft.bench.Pipelines.curationCascadeOn]]: html strip →
+  * encoding repair → url blocklist → quality and Gopher gates → exact
+  * dedup → MinHash-LSH components → canonical keep → stratified sample
+  * → sequence packing) → JSONL sink of the packed-sequence census. The
+  * cascade is the one the `curation_cascade` bench entry times, so the
+  * app and the bench run the same definition.
   */
 object CorpusPrepApp {
-
-  /** Near-dup removal: LSH candidates → exact-Jaccard confirm →
-    * connected components over the confirmed pairs → keep the minimum
-    * doc_id of every cluster. Transitive closure (not greedy pairwise
-    * dropping) is what guarantees exactly one survivor per dup CLUSTER:
-    * with a chain a~b, b~c where a–c never became a candidate pair,
-    * greedy would still keep a but drops b and c for the wrong reason
-    * (c's only confirmed twin, b, is itself gone).
-    */
-  def dropNearDups(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = TextDedup.shingleSets(docs, "doc_id", "text", distinct = true)
-    val pairs = TextDedup.candidatePairs(
-      TextDedup.bandKeys(TextDedup.minhashSignatures(sh, "doc_id"), "doc_id"),
-      "doc_id")
-    val confirmed = TextDedup.jaccard(pairs, sh, "doc_id")
-      .filter(col("jacc") >= threshold)
-    val comps = Components.connectedComponents(confirmed, docs, "doc_id")
-    docs.join(Components.representatives(comps, "doc_id"), Seq("doc_id"), "left_semi")
-  }
 
   def main(args: Array[String]): Unit = {
     val spark = AppUtil.session()
     val sf = AppUtil.sfDir(args)
 
-    // stage 0 (ingest): stage the fixture as JSONL, read it back — the
-    // wire format a real corpus arrives in
+    // ingest: stage the fixture as JSONL, read it back — the wire
+    // format a real corpus arrives in
     val staging = graft.core.Staging.tmpDir("corpus")
     Sinks.jsonl(Tables.documents(spark, sf), staging)
-    // batch main: the JVM exits with the run, so the cache dies with
-    // it (the documented app-scope cache ownership)
-    val raw = Sources.jsonl(spark, staging).cache()
+    val run = Runner.runObserved(Sources.jsonl(spark, staging), Seq(
+      Runner.Stage("curation_cascade", Pipelines.curationCascadeOn(spark, _))))
 
-    // observed counts: every stage's row count is collected as a side
-    // effect of the ONE terminal write below (no per-stage re-execution
-    // — the count() checkpoint form re-runs the upstream per stage,
-    // which is exactly what 100 TB forbids)
-    val run = Runner.runObserved(raw, Seq(
-      Runner.Stage("lang_filter", df =>
-        df.filter(TextAnalysis.langId(col("text")).isin("en", "und"))),
-      Runner.Stage("quality_floor", df =>
-        df.filter(TextAnalysis.qualityScore(col("text")) >= 0.3)),
-      Runner.Stage("repetition_cut", df =>
-        // Gopher-style: drop documents dominated by one bigram (>50%)
-        // or with too little vocabulary (<25% distinct tokens)
-        df.join(
-          TextAnalysis.repetitionProfile(df, "doc_id", "text")
-            .filter(col("top_bigram_frac") > 0.5 || col("distinct_ratio") < 0.25)
-            .select("doc_id"),
-          Seq("doc_id"), "left_anti")),
-      Runner.Stage("exact_dedup", df => {
-        val reps = df.groupBy(md5(col("text")).as("fp"))
-          .agg(min(col("doc_id")).as("doc_id"))
-        df.join(reps.select("doc_id"), Seq("doc_id"), "left_semi")
-      }),
-      Runner.Stage("near_dedup", dropNearDups(_, threshold = 0.8))))
-
-    // the curated corpus is the app's deliverable — NOT under the
-    // auto-cleaned staging root; it must survive JVM exit
+    // the app's deliverable — NOT under the auto-cleaned staging root;
+    // it must survive JVM exit. The write is the run's one terminal and
+    // fills the stage count.
     val outDir = java.nio.file.Files.createTempDirectory("graft_corpus_out").toString
-    val t0 = System.nanoTime()
-    Sinks.jsonl(run.output.select("doc_id", "text", "lang", "source", "n_chars"), outDir)
-    val secs = (System.nanoTime() - t0) / 1e9
-    run.counts.foreach { case (n, c) => println(f"[corpus] $n%-16s rows=$c") }
-    println(f"[corpus] curated ${run.counts.last._2} / ${raw.count()} docs in $secs%.1f s -> $outDir")
+    Sinks.jsonl(run.output, outDir)
+    AppUtil.printCounts(run)
+    println(s"[corpus] packed-sequence census -> $outDir")
     spark.stop()
   }
 }

@@ -111,18 +111,14 @@ object Pipelines {
     Dedup.dropExactDuplicates(
       Tables.lineitem(spark, sfDir).drop("l_quantity"))
 
-  /** ANN bench configuration, shared with ScaleProbe so the rehearsal
-    * measures the same operator setup as the headline bench.
-    */
+  /** ANN bench configuration, shared by the ANN entries. */
   val AnnQueryIds: Seq[Long] = (0L until 10L)
   val AnnK = 10
   val AnnLshDims: Seq[Int] = Seq(0, 8, 16, 24, 32, 40, 48, 56)
 
   def lshTopK(spark: SparkSession, sfDir: String): DataFrame =
-    lshTopKOn(Tables.embeddings(spark, sfDir))
-
-  def lshTopKOn(emb: DataFrame): DataFrame =
-    Similarity.lshTopK(emb, "vec_id", "embedding", AnnQueryIds, AnnK, AnnLshDims)
+    Similarity.lshTopK(Tables.embeddings(spark, sfDir), "vec_id", "embedding",
+      AnnQueryIds, AnnK, AnnLshDims)
 
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
@@ -649,14 +645,10 @@ object Pipelines {
     graft.quality.Repetition.repetitionFilter(
       Tables.documents(spark, sfDir), "doc_id", "text")
 
-  /** Cascade over an explicit documents frame — the ScaleProbe arm
-    * multiplies the input through this entry so the flagship's growth
-    * curve uses the same methodology as the per-operator probes.
+  /** Cascade over an explicit documents frame — `CorpusPrepApp` runs
+    * it over its JSONL-ingested corpus, the bench over the fixture.
     */
   def curationCascadeOn(spark: SparkSession, raw: DataFrame): DataFrame = {
-    def mark(l: String): Unit = if (sys.env.contains("GRAFT_CASCADE_DEBUG"))
-      System.err.println(f"[curation] $l at ${System.nanoTime() / 1e9}%.3f")
-    mark("start")
     // synthetic crawl facade over the plain-text fixture: html + url
     val crawl = raw.select(col("doc_id"), col("lang"), col("n_chars"),
       concat(lit("<html><head><style>p{color:red}</style></head><body><p>"),
@@ -717,7 +709,6 @@ object Pipelines {
         lit(10L) * col("n_alpha") >= lit(8L) * col("n_words") &&
         col("n_stop") >= 2L)
       .select(col("doc_id"))
-    mark("gated ckpt done")
     val ruled = gated.join(keepIds, Seq("doc_id"), "left_semi")
     // Second boundary: `exact` feeds THREE consumers — the LSH shingle
     // pipeline, the component-node universe, and the canonical-keep
@@ -728,7 +719,6 @@ object Pipelines {
       ruled.withColumn("fp", TextAnalysis.normalizedFingerprint(col("text"))),
       Seq("fp"))
       .localCheckpoint()
-    mark("exact ckpt done")
     val sh = TextDedup.shingleSets(exact, "doc_id", "text", distinct = false,
       parallelism = Some(spark.sparkContext.defaultParallelism))
     val comps = graft.dedup.Components.connectedComponentsLogStar(
@@ -736,12 +726,10 @@ object Pipelines {
         TextDedup.bandKeys(TextDedup.minhashSignatures(sh, "doc_id"), "doc_id"),
         "doc_id"),
       exact.select(col("doc_id")), "doc_id")
-    mark("cc done")
     val canonical = comps.groupBy(col("comp"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val kept = exact.join(canonical, Seq("doc_id"))
-    mark("kept join built")
     val sampled = graft.operators.Sampling.weightedTopKPerStratum(
       kept, "doc_id", "lang", "n_chars", k = 80, seed = "cascade")
     graft.operators.Packing.packFill(
@@ -843,46 +831,24 @@ object Pipelines {
     * Returns the built index's residual-code table — counting it
     * forces the whole cascade plus the artifact write.
     */
-  def embeddingCascade(spark: SparkSession, sfDir: String): DataFrame =
-    embeddingCascadeOn(spark, Tables.embeddings(spark, sfDir),
-      embCascadeDir)
-
-  // ONE artifact directory per JVM, overwritten per invocation: the
-  // bench harness runs the thunk 5× (warmup + repeats), and a fresh
-  // tmpDir each time accumulated 5 full IVFADC indexes on disk per
-  // session (r16 advice). Overwrite semantics hold end-to-end:
-  // saveIvfPqResidualFrozen → saveIvf (mode overwrite) + savePq
-  // (mode overwrite on codes/codebook/meta).
-  private lazy val embCascadeDir =
-    graft.core.Staging.tmpDir("bench_emb_cascade")
-
-  /** [[embeddingCascade]] over a caller-supplied corpus (the
-    * ScaleProbe entry point).
-    */
-  def embeddingCascadeOn(spark: SparkSession, emb: DataFrame,
-                         outDir: String): DataFrame = {
+  def embeddingCascade(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.similarity.ProductQuant
-    def mark(l: String): Unit = if (sys.env.contains("GRAFT_CASCADE_DEBUG"))
-      System.err.println(f"[cascade] $l at ${System.nanoTime() / 1e9}%.3f")
-    mark("start")
+    val emb = Tables.embeddings(spark, sfDir)
     // stage boundaries MATERIALIZE (localCheckpoint): the downstream
     // trainers iterate, and every Lloyd round re-executing the whole
     // upstream cascade lineage is the difference between 4 s and 47 s
     // at sf0.1 (measured) — at 100 TB each stage lands in storage
     val exact = emb.select(col("vec_id"), col("embedding"))
       .dropDuplicates("embedding").localCheckpoint()
-    mark("exact-dedup done")
     val model = Similarity.kmeansTrain(exact, "vec_id", "embedding",
       k = 16, iters = 2, dim = 64)
     val idx = Similarity.IvfIndex(
       Similarity.assignToCentroids(exact, "vec_id", "embedding",
         model.centroids), model.centroids)
-    mark("kmeans+assign done")
     val kept = Similarity.semDedupWithIndex(idx, "vec_id", "embedding",
       threshold = 0.9, bucketCap = 128)
       .filter(col("keep")).select(col("vec_id"), col("embedding"))
       .localCheckpoint()
-    mark("semdedup done")
     val probes = emb.filter(col("vec_id") % 41 === 0)
       .select(col("vec_id").as("probe_id"),
         concat(array(lit(0.0f)),
@@ -892,23 +858,27 @@ object Pipelines {
         "vec_id", "embedding", tau = 0.9, model.centroids, nProbe = 2)
       .filter(col("contaminated") === 0).select(col("vec_id"))
       .join(kept, "vec_id").localCheckpoint()
-    mark("decontam done")
     val picked = Similarity.clusterBalancedSample(survivors, "vec_id",
         "embedding", model.centroids, perCell = 24)
       .select(col("vec_id")).join(survivors, "vec_id").localCheckpoint()
-    mark("balanced-sample done")
     val pIdx = Similarity.IvfIndex(
       Similarity.assignToCentroids(picked, "vec_id", "embedding",
         model.centroids), model.centroids)
-    mark("assign2 done")
     val cb = ProductQuant.buildCodebookResidual(pIdx, "vec_id",
       "embedding", m = 4, ks = 8, iters = 2, dim = 64)
-    mark("codebook done")
     ProductQuant.saveIvfPqResidualFrozen(picked, "vec_id", "embedding",
-      model.centroids, cb, outDir)
-    mark("artifact written")
-    spark.read.parquet(s"$outDir/pq/codes")
+      model.centroids, cb, embCascadeDir)
+    spark.read.parquet(s"$embCascadeDir/pq/codes")
   }
+
+  // ONE artifact directory per JVM, overwritten per invocation: the
+  // bench harness runs the thunk 5× (warmup + repeats), and a fresh
+  // tmpDir each time accumulated 5 full IVFADC indexes on disk per
+  // session (r16 advice). Overwrite semantics hold end-to-end:
+  // saveIvfPqResidualFrozen → saveIvf (mode overwrite) + savePq
+  // (mode overwrite on codes/codebook/meta).
+  private lazy val embCascadeDir =
+    graft.core.Staging.tmpDir("bench_emb_cascade")
 
   /** WordPiece re-tokenization throughput (tk33's operator at bench
     * scale — the third tokenizer family's sibling of bpe_tokenize /

@@ -88,8 +88,6 @@ object Components {
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter supersteps " +
         "(diameter too large — switch to large-star/small-star)")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] min-label converged in $iter supersteps")
     edges.unpersist()
     labels.withColumnRenamed("id", idCol)
   }
@@ -194,8 +192,6 @@ object Components {
     }
     require(changed == 0,
       s"log-star components did not converge in $maxIter rounds")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] log-star converged in $iter rounds")
     // fixpoint edges are stars rooted at component minima
     val rooted = edges.select(col("hi").as("id"), col("lo").as("comp"))
       .groupBy("id").agg(min(col("comp")).as("comp"))

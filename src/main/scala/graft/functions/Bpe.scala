@@ -278,7 +278,8 @@ object Bpe {
     *    (−old adjacencies, +new adjacencies), so the per-round shuffle
     *    volume is O(affected words), not O(vocab) — at a 32k-merge
     *    production vocab the late rounds touch a vanishing fraction of
-    *    the vocabulary (ScaleProbe's bpe_train arm measures the curve).
+    *    the vocabulary (DESIGN.md's BPE scale arm records the curve,
+    *    measured with a since-deleted count()-terminal probe).
     *
     * Exactness contract: byte-for-byte the same merge sequence as
     * [[train]]/[[trainBytes]] (argmax over exact-long counts, count
@@ -439,8 +440,8 @@ object Bpe {
     * strictly below. Worst case the batch is a single pick — the
     * plain sequential argmax — so progress and exactness never
     * degrade; ties at the snapshot edge just shrink the batch.
-    * ScaleProbe's `bpe_batched` arm measures rounds/merge (< 1 from
-    * the early, heavy-tailed rounds where batching pays).
+    * Rounds/merge stay < 1 from the early, heavy-tailed rounds where
+    * batching pays (BpeSpec pins it via [[trainBytesBatchedWithStats]]).
     */
   def trainIncrementalBatched(df: DataFrame, textCol: String, nMerges: Int,
                               batchCap: Int = 32): Vector[(String, String)] =
@@ -466,7 +467,7 @@ object Bpe {
       batchCap)._1
 
   /** [[trainBytesIncrementalBatched]] exposing the ROUND count — the
-    * ScaleProbe readout for the jobs-per-merge claim.
+    * readout BpeSpec asserts for the jobs-per-merge claim.
     */
   private[graft] def trainBytesBatchedWithStats(df: DataFrame, textCol: String,
                                                 nMerges: Int, batchCap: Int): (Vector[(String, String)], Int) =

@@ -68,8 +68,10 @@ object Exact {
     * serializes a JavaBigDecimal per update) becomes a codegen
     * `Math.floor` long ([[cents]]) cast to a COMPACT Decimal, summed
     * in decimal(38,0), with ONE exact ×0.01 decimal multiply at the
-    * end. Measured 1.5–1.6× faster on q1_agg's five aggregates
-    * (ExactSumProbe, local[32] sf0.1).
+    * end. Measured 1.5–1.6× faster on q1_agg's five aggregates (an
+    * isolated A/B of the two spellings, local[32] sf0.1, r18; that
+    * one-off probe is deleted — `graft.bench.Probe --entries q1_agg`
+    * times the shipped route).
     *
     * BIT-IDENTICAL to [[dsum]] at EVERY scale, not just Σ < 2^53:
     *  1. per row, cents(c) = k exactly where dec(c,2) = k/100 exactly

@@ -71,10 +71,10 @@ object StreamMediaCatalog {
 
   /** The dHash fixture image for one source id — dims and pixel bytes
     * pure functions of `src`, one optionally-perturbed byte at (0,0)B.
-    * SINGLE source of truth for the gate/bench/scale-probe corpus (the
-    * r13 review deduplicated Pipelines.imageNearDup onto dhashPayloads;
-    * ScaleProbe's image arm calls this directly so a formula tweak can
-    * never decouple the probe from what the gates measure).
+    * SINGLE source of truth for the gate/bench corpus (the r13 review
+    * deduplicated Pipelines.imageNearDup onto dhashPayloads; DocStreamSpec
+    * calls this directly so a formula tweak can never decouple a spec
+    * from what the gates measure).
     */
   private[graft] def dhashImage(src: Long, pert: Int): Array[Byte] = {
     val w = 6 + (src % 5).toInt

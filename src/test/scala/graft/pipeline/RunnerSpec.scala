@@ -1,33 +1,24 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class RunnerSpec extends SparkSpec {
   import spark.implicits._
 
-  test("runner executes stages in order with timing and optional counts") {
-    val input = (1 to 100).toDF("n")
-    val result = Runner.run(input, Seq(
-      Runner.Stage("filter_even", _.filter($"n" % 2 === 0)),
-      Runner.Stage("square", _.withColumn("sq", $"n" * $"n"))),
-      countCheckpoints = true)
-    assert(result.reports.map(_.stage) == Seq("filter_even", "square"))
-    assert(result.reports.map(_.rows) == Seq(Some(50L), Some(50L)))
-    assert(result.output.agg(max($"sq")).as[Long].head() == 10000L)
-    assert(result.totalSeconds > 0)
-    // checkpoints off → no counts materialized
-    val lazyRun = Runner.run(input, Seq(Runner.Stage("id", identity)))
-    assert(lazyRun.reports.head.rows.isEmpty)
-  }
+  private def stages = Seq(
+    Runner.Stage("filter_even", _.filter($"n" % 2 === 0)),
+    Runner.Stage("gt_50", _.filter($"n" > 50)))
 
   test("observed run yields per-stage counts from ONE terminal action") {
-    val input = (1 to 100).toDF("n")
-    val run = Runner.runObserved(input, Seq(
-      Runner.Stage("filter_even", _.filter($"n" % 2 === 0)),
-      Runner.Stage("gt_50", _.filter($"n" > 50))))
+    val run = Runner.runObserved((1 to 100).toDF("n"), stages)
     val terminal = run.output.count() // the single action
     assert(terminal == 25)
+    assert(run.counts == Seq("filter_even" -> 50L, "gt_50" -> 25L))
+  }
+
+  test("a noop write as the one terminal fills the per-stage counts") {
+    val run = Runner.runObserved((1 to 100).toDF("n"), stages)
+    run.output.write.format("noop").mode("overwrite").save()
     assert(run.counts == Seq("filter_even" -> 50L, "gt_50" -> 25L))
   }
 }
