@@ -177,17 +177,18 @@ object QualityMlCatalog {
     // exactGate: single partition for bit-reproducible gradient sums;
     // distributed path: partitions follow row count, not session width
     // (FeaturePipeline.sizedForFit — an iterative fit pays per-task
-    // overhead on every one of its ~100 jobs)
-    val fitInput =
-      (if (exactGate) train.coalesce(1)
-       else FeaturePipeline.sizedForFit(train)).cache()
+    // overhead on every one of its ~100 jobs). The distributed path
+    // caches `train` BEFORE sizing, so the sizing count() fills the
+    // cache instead of running the orders⋈customer lineage once more.
+    val cached = if (exactGate) train.coalesce(1).cache() else train.cache()
+    val fitInput = if (exactGate) cached else FeaturePipeline.sizedForFit(cached)
     // fit() is eager (Pipeline.fit materializes every stage), so the
     // cache can be dropped immediately — leaving it resident poisons
     // every later query in the same session (measured: the bench's
     // fuzzy_pairs entry degraded 0.97 s → 3.5 s once this fit ran first)
     val model =
       try FeaturePipeline.fit(fitInput, mlConfig)
-      finally fitInput.unpersist(blocking = false)
+      finally cached.unpersist(blocking = false)
     CombinationSearch.scoreWithLabels(model, test)
   }
 

@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * precomputes its dot product against every codeword (`m·ks` dots on
   * the handful of query rows), then each corpus row costs `m` array
   * lookups + `m−1` adds — NO multiplications, codegen'd `element_at`
-  * chains, never a lambda. Codes are computed map-side against
-  * codebook slices embedded as plan literals (the rpTopK
-  * literal-matrix idiom), so encoding shuffles nothing.
+  * chains, never a lambda. Codes are computed map-side by one
+  * [[graft.functions.NearestCentroid]] kernel call per subspace, each
+  * against its codewords shipped as a broadcast matrix (the plan holds
+  * only the handle), so encoding shuffles nothing and its plan does not
+  * grow with m·ks.
   *
   * Codebooks are md5-ordered deterministic picks (the
   * `buildIvfHashInit` discipline): the whole pipeline — codebook,
@@ -187,36 +189,34 @@ object ProductQuant {
   def encodeResidual(idx: Similarity.IvfIndex, idCol: String,
                      vecCol: String, cb: PqCodebook): DataFrame = {
     val res = residualFrame(idx.assigned, idCol, vecCol, idx.centroids)
-    val codes = (0 until cb.m).map { j =>
-      val subv = slice(col("__res"), j * cb.sub + 1, cb.sub)
-      val dists = array((0 until cb.ks).map { c =>
-        round(lit(cb.sliceNorm2(j, c)) -
-          lit(2.0) * Similarity.dot(subv, lit(cb.slice(j, c).toArray)), 6)
-      }: _*)
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
-    res.select(col(idCol), col("cell"), array(codes: _*).as("codes"))
+    res.select(col(idCol), col("cell"), codesOf(res.sparkSession, col("__res"), cb))
   }
 
   /** Map-side encoding: (id, codes array<int> of length m). Per
-    * subspace, distances to all `ks` codewords unroll to a literal
-    * array of `round(||c||² − 2·v_j·c, 6)` (the ||v_j||² term is
-    * constant across codewords and cannot move the argmin); the code
-    * is the first index attaining the min — rounding + first-index
-    * tiebreak make the argmin engine-exact.
+    * subspace, the code is the argmin over the `ks` codewords of
+    * `round(||c||² − 2·v_j·c, 6)` (the ||v_j||² term is constant
+    * across codewords and cannot move the argmin), first index on
+    * ties — rounding + first-index tiebreak make the argmin
+    * engine-exact.
     */
   def encode(emb: DataFrame, idCol: String, vecCol: String,
-             cb: PqCodebook): DataFrame = {
-    val codes = (0 until cb.m).map { j =>
-      val subv = slice(col(vecCol), j * cb.sub + 1, cb.sub)
-      val dists = array((0 until cb.ks).map { c =>
-        round(lit(cb.sliceNorm2(j, c)) -
-          lit(2.0) * Similarity.dot(subv, lit(cb.slice(j, c).toArray)), 6)
-      }: _*)
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
+             cb: PqCodebook): DataFrame =
     emb.filter(Similarity.scorable(col(vecCol)))
-      .select(col(idCol), array(codes: _*).as("codes"))
+      .select(col(idCol), codesOf(emb.sparkSession, col(vecCol), cb))
+
+  /** The `codes` column: one [[graft.functions.NearestCentroid]] call
+    * per subspace j, over the slice [j·sub, (j+1)·sub) against
+    * subspace j's codewords as cells 0..ks−1. Each subspace's
+    * codewords ship as one broadcast, not as plan literals.
+    */
+  private def codesOf(spark: org.apache.spark.sql.SparkSession, vec: Column,
+                      cb: PqCodebook): Column = {
+    import graft.functions.{CentroidMatrix, NearestCentroid}
+    array((0 until cb.m).map { j =>
+      val bc = spark.sparkContext.broadcast(
+        CentroidMatrix((0 until cb.ks).map(c => c -> cb.slice(j, c).toArray)))
+      NearestCentroid.nearest_centroid(vec, bc, cb.dim, j * cb.sub)
+    }: _*).as("codes")
   }
 
   /** The query side's LUT: table[j][c] = q_j · codeword(j, c), computed

@@ -1,8 +1,9 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`): brute-force cosine top-k as the exact baseline and
@@ -295,9 +296,9 @@ object Similarity {
     * any engine — or any rebuild after a repartition — derives the
     * identical quantizer, which is what lets the full IVF top-k be
     * oracle-gated, unlike KMeans centers). Assignment is
-    * argmin_cell round(c·c − 2·v·c, 6) with cell-id tiebreak, computed
-    * as one map-side-combinable min-struct aggregation over the
-    * broadcast centroid table — no window, one shuffle keyed by id.
+    * argmin_cell round(c·c − 2·v·c, 6) with cell-id tiebreak
+    * ([[assignToCentroids]]: one row-local kernel over the broadcast
+    * centroid matrix — no window, no shuffle).
     * Trades cluster quality for reproducibility versus [[buildIvf]];
     * cell balance comes from the sample being hash-uniform.
     */
@@ -321,21 +322,23 @@ object Similarity {
     * index maintenance (append new crawl rows against the persisted
     * quantizer, no refit) assigns by exactly the same rounding and
     * tie rules as the original build. Argmin_cell
-    * round(c·c − 2·v·c, 6) with cell-id tiebreak, one
-    * map-side-combinable min-struct aggregation over the broadcast
-    * centroid table.
+    * round(c·c − 2·v·c, 6) with cell-id tiebreak, computed row-locally
+    * by [[graft.functions.NearestCentroid]]: the k centroid rows are
+    * collected (model-sized; free on a local frame) and ship as one
+    * broadcast matrix, so assignment is one narrow projection — no
+    * join, no exchange. Output: (idCol, vecCol, cell).
     */
   def assignToCentroids(emb: DataFrame, idCol: String, vecCol: String,
                         centroids: DataFrame): DataFrame =
-    emb.filter(scorable(col(vecCol))).select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(centroids))
-      .withColumn("__d", round(dot(col("centroid"), col("centroid"))
-        - lit(2.0) * dot(col(vecCol), col("centroid")), 6))
-      // (__d, cell) is unique per id, so the trailing vec field never
-      // decides the min — it just rides along to avoid a second join
-      .groupBy(col(idCol))
-      .agg(min(struct(col("__d"), col("cell"), col(vecCol).as("v"))).as("m"))
-      .select(col(idCol), col("m.v").as(vecCol), col("m.cell").as("cell"))
+    assignWith(emb.filter(scorable(col(vecCol))), idCol, vecCol,
+      graft.functions.CentroidMatrix.collect(centroids))
+
+  private def assignWith(clean: DataFrame, idCol: String, vecCol: String,
+                         m: graft.functions.CentroidMatrix): DataFrame = {
+    val bc = clean.sparkSession.sparkContext.broadcast(m)
+    clean.select(col(idCol), col(vecCol),
+      graft.functions.NearestCentroid.nearest_centroid(col(vecCol), bc).as("cell"))
+  }
 
   /** Persist / reload the index (cell-partitioned corpus copy: probing
     * a cell then reads only that cell's files — partition pruning does
@@ -700,7 +703,8 @@ object Similarity {
 
   /** A trained k-means model: the final per-(cell, dim) means in v7's
     * long form (hash-friendly) plus the same centroids re-assembled as
-    * arrays (what assignment consumes).
+    * arrays (what assignment consumes). Both are local frames (k·dim
+    * and k rows), built from collected means.
     */
   final case class KmeansModel(means: DataFrame, centroids: DataFrame)
 
@@ -712,7 +716,7 @@ object Similarity {
     * after a repartition, derives identical seeds); each Lloyd round is
     *
     *  - assign: argmin_cell round(c·c − 2·v·c, 6), cell-id tiebreak
-    *    ([[assignToCentroids]] verbatim);
+    *    ([[assignToCentroids]]'s kernel verbatim);
     *  - update: per-(cell, dim) fixed-point mean ([[groupCentroids]]'s
     *    floor(x·1e9) int64 sums — exact and order-independent; the two
     *    closing divisions are identical IEEE ops on identical operands
@@ -726,16 +730,18 @@ object Similarity {
     * undefined); both sides mirror this and labels are never
     * renumbered.
     *
-    * Scale shape per round: one broadcast of k centroids across the
-    * corpus (map work), one map-side-combined wide aggregation (k·dim
-    * scalars cross the shuffle — NOT rows·dim exploded elements), one
-    * bounded k-row array rebuild; centroid frames are
-    * localCheckpoint'ed so plan lineage never accumulates across
-    * rounds. The O(iters) sequential-job latency is inherent to Lloyd
-    * (each assignment needs the previous round's means).
+    * Scale shape per round: one narrow kernel pass over the corpus
+    * against the broadcast k-row centroid matrix, one map-side-combined
+    * wide aggregation (k·dim scalars cross the shuffle — NOT rows·dim
+    * exploded elements), and one collect of those k·dim means, from
+    * which the next round's matrix is built locally (the way MLlib
+    * KMeans keeps its centers). No plan lineage carries across rounds.
+    * The O(iters) sequential-job latency is inherent to Lloyd (each
+    * assignment needs the previous round's means).
     */
   def kmeansTrain(emb: DataFrame, idCol: String, vecCol: String,
                   k: Int, iters: Int, dim: Int): KmeansModel = {
+    import graft.functions.CentroidMatrix
     require(k >= 1 && iters >= 1, s"need k >= 1 and iters >= 1, got k=$k iters=$iters")
     // iterating-tail discipline: the seed pick plus every Lloyd round
     // re-executes this frame's lineage (scan + scorable filter — or a
@@ -754,29 +760,33 @@ object Similarity {
     val clean = if (preMaterialized) cleanBase else cleanBase.localCheckpoint()
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("__h"), col(idCol))
-    def toArrays(means: DataFrame): DataFrame = toCentroidArrays(means)
-    var cents = clean.select(col(idCol), col(vecCol))
+    var cents = CentroidMatrix.collect(clean.select(col(idCol), col(vecCol))
       .withColumn("__h", md5(col(idCol).cast("string")))
       .orderBy(col("__h"), col(idCol)).limit(k) // bounded k-row frame
       .withColumn("cell", (row_number().over(w) - 1).cast("int"))
       .select(col("cell"),
-        transform(col(vecCol), x => x.cast("double")).as("centroid"))
-      // lazy (r18): the k-row seed frame materializes inside round 1's
-      // assignment job instead of paying its own job
-      .localCheckpoint(eager = false)
+        transform(col(vecCol), x => x.cast("double")).as("centroid")))
     var means: DataFrame = null
-    var t = 0
-    while (t < iters) {
-      means = groupCentroids(
-        assignToCentroids(clean, idCol, vecCol, cents), "cell", vecCol, dim)
-        .localCheckpoint() // truncate per-round lineage (eager — the round's job)
-      // lazy (r18): the k-row reassembly materializes inside the NEXT
-      // round's assignment job (or the caller's first action) — one
-      // job per Lloyd round instead of two, identical values
-      cents = toArrays(means).localCheckpoint(eager = false)
-      t += 1
+    var rows: Seq[Row] = Nil
+    var centRows: Seq[(Int, Array[Double])] = Nil
+    for (_ <- 1 to iters) {
+      means = groupCentroids(assignWith(clean, idCol, vecCol, cents),
+        "cell", vecCol, dim)
+      // (cell, dim, centroid, n), k·dim rows: the next round's matrix
+      rows = means.collect().toSeq.sortBy(r => (r.getInt(0), r.getInt(1)))
+      centRows = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map { case (cell, rs) => cell -> rs.map(_.getDouble(2)).toArray }
+      cents = CentroidMatrix(centRows)
     }
-    KmeansModel(means, cents)
+    val spark = emb.sparkSession
+    val schema = means.schema
+    val centSchema = StructType(Seq(schema("cell"), StructField("centroid",
+      ArrayType(DoubleType, containsNull = schema("centroid").nullable))))
+    KmeansModel(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      spark.createDataFrame(java.util.Arrays.asList(centRows.map {
+        case (cell, c) => Row(cell, c.toSeq)
+      }: _*), centSchema))
   }
 
   /** IVF over the Lloyd-TRAINED deterministic quantizer — the rung
@@ -797,8 +807,8 @@ object Similarity {
   }
 
   /** Re-assemble [[groupCentroids]]' long form back into (cell,
-    * centroid array) — shared by [[kmeansTrain]]'s rounds and the
-    * mini-batch streaming trainer's per-batch merge.
+    * centroid array) as a distributed frame — the mini-batch streaming
+    * trainer's per-batch merge.
     */
   private[graft] def toCentroidArrays(means: DataFrame): DataFrame =
     means.groupBy(col("cell"))

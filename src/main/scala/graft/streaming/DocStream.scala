@@ -756,9 +756,10 @@ object DocStream {
     * score against only their probes' cells, per micro-batch, by
     * reusing the exact batch operator — a vector's verdict depends
     * only on (vector, centroids, probes), so per-batch results ARE
-    * the global answer, zero cross-batch state. Caller freezes the
-    * artifacts (localCheckpoint'ed centroids from `kmeansTrain`, a
-    * checkpointed probe frame) so no trigger re-derives them.
+    * the global answer, zero cross-batch state. The artifacts are
+    * frozen once (the centroids — a local frame from `kmeansTrain` —
+    * and the probe frame, both checkpointed) so no trigger re-derives
+    * them.
     */
   def semanticDecontamIvfFold(embStream: DataFrame, probes: DataFrame,
                               tau: Double, centroids: DataFrame,

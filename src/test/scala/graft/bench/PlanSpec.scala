@@ -301,21 +301,32 @@ class PlanSpec extends SparkSpec {
   }
 
   test("kmeans assignment: centroids broadcast; update shuffles k·dim scalars (partial sums)") {
+    // the centroids ride one broadcast matrix into a row-local kernel:
+    // no join, no exchange, no object aggregate in the assignment
+    val emb = graft.core.Tables.embeddings(spark, sf0001)
     val m = graft.similarity.Similarity.kmeansTrain(
-      graft.core.Tables.embeddings(spark, sf0001), "vec_id", "embedding",
-      k = 4, iters = 1, dim = 64)
+      emb, "vec_id", "embedding", k = 4, iters = 1, dim = 64)
     val assigned = graft.similarity.Similarity.assignToCentroids(
-      graft.core.Tables.embeddings(spark, sf0001), "vec_id", "embedding",
-      m.centroids)
+      emb, "vec_id", "embedding", m.centroids)
     val plan = planOf(assigned)
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
-      s"centroids must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"), plan)
-    // the mean update is a two-phase aggregation (map-side partial)
+    assert(plan.contains("nearest_centroid"), s"kernel missing:\n$plan")
+    assert(!plan.contains("Join") && !plan.contains("Exchange") &&
+      !plan.contains("ObjectHashAggregate"), s"assignment must be narrow:\n$plan")
+    // the mean update is a two-phase aggregation (map-side partial,
+    // then final)
     val upd = planOf(graft.similarity.Similarity.groupCentroids(
       assigned, "cell", "embedding", dim = 64))
-    assert(upd.linesIterator.filter(_.contains("HashAggregate"))
-      .exists(_.contains("partial_")), s"no partial aggregation:\n$upd")
+    val aggs = upd.linesIterator.filter(_.contains("HashAggregate")).toSeq
+    assert(aggs.exists(_.contains("partial_")) && aggs.exists(!_.contains("partial_")),
+      s"no partial + final aggregation:\n$upd")
+    assert(!upd.contains("ObjectHashAggregate"), upd)
+    // PQ encoding: one kernel call per subspace, map-side only
+    val cb = graft.similarity.ProductQuant.buildCodebook(
+      emb, "vec_id", "embedding", m = 8, ks = 16)
+    val enc = planOf(graft.similarity.ProductQuant.encode(
+      emb, "vec_id", "embedding", cb))
+    assert(enc.contains("nearest_centroid") && !enc.contains("Exchange") &&
+      !enc.contains("Join"), s"encode must be narrow:\n$enc")
   }
 
   test("dc3 semanticProfile: probes broadcast, one per-id max agg, no cartesian") {

@@ -2,6 +2,17 @@
 """Round-over-round bench comparison (the variance-guard ritual).
 
 Usage: python3 tools/bench_delta.py BENCH_rPREV.json BENCH_rCUR.json
+       python3 tools/bench_delta.py --traces PARENT.json CHANGE.json
+
+`--traces` diffs two perfbench trace reports
+(`.bench_build/traces/<workload>-seed<n>-<time>.json`, written by
+`perfbench/run.py --trace 1`) exactly: every per-pipeline census count
+that moved (jobs, stages, tasks, exchanges, broadcasts, object_aggs,
+nested_loop_joins, files_written) and every per-layer metric. Counts
+repeat exactly between runs of one seed, so any census line printed is
+a real change; per-layer counts a report lists as unsteady (they moved
+between its own traced passes) are marked. Exit 0
+(informational), 2 when the reports are of different workloads.
 
 Compares per-entry best-of-N times between two bench JSONs and flags
 regressions, using the spread (min/med/max, present since round 5) to
@@ -147,7 +158,70 @@ def load(path):
     return parsed.get("queries", {}), parsed.get("spread", {})
 
 
+CENSUS_COUNTS = ("jobs", "stages", "tasks", "exchanges", "broadcasts",
+                 "object_aggs", "nested_loop_joins", "files_written")
+
+
+def trace_delta(prev, cur):
+    """Diff two trace reports. Returns (census, metrics): census rows
+    (pipeline, count, prev, cur) for every count that differs, metric
+    rows (name, prev, cur) for every per-layer metric in either."""
+    census = []
+    pc, cc = prev.get("census", {}), cur.get("census", {})
+    for pipe in sorted(set(pc) | set(cc)):
+        for key in CENSUS_COUNTS:
+            a = pc.get(pipe, {}).get(key)
+            b = cc.get(pipe, {}).get(key)
+            if a != b:
+                census.append((pipe, key, a, b))
+    pm, cm = prev.get("metrics", {}), cur.get("metrics", {})
+    metrics = [(k, pm.get(k), cm.get(k)) for k in sorted(set(pm) | set(cm))]
+    return census, metrics
+
+
+def _fmt(v):
+    if v is None:
+        return "-"
+    return f"{v:.0f}" if float(v).is_integer() else f"{v:.3f}"
+
+
+def _delta(a, b):
+    if a is None or b is None:
+        return ""
+    d = b - a
+    return f"{d:+.0f}" if float(d).is_integer() else f"{d:+.3f}"
+
+
+def main_traces(prev_path, cur_path):
+    with open(prev_path) as f:
+        prev = json.load(f)
+    with open(cur_path) as f:
+        cur = json.load(f)
+    if prev.get("workload") != cur.get("workload"):
+        print(f"workloads differ: {prev.get('workload')} vs "
+              f"{cur.get('workload')}", file=sys.stderr)
+        sys.exit(2)
+    print(f"workload {cur.get('workload')}: seed {prev.get('seed')} -> "
+          f"{cur.get('seed')}, cpus {prev.get('cpus')} -> {cur.get('cpus')}")
+    unsteady = set(prev.get("unsteady_counts") or []) | \
+        set(cur.get("unsteady_counts") or [])
+    census, metrics = trace_delta(prev, cur)
+    for pipe, key, a, b in census:
+        print(f"[census] {pipe + '.' + key:<40} {_fmt(a):>10} -> "
+              f"{_fmt(b):>10} {_delta(a, b):>8}")
+    pipes = set(prev.get("census", {})) | set(cur.get("census", {}))
+    print(f"[census] {len(census)} of {len(pipes) * len(CENSUS_COUNTS)} "
+          f"counts moved across {len(pipes)} pipelines")
+    for name, a, b in metrics:
+        mark = "  [unsteady]" if name in unsteady else ""
+        print(f"[metric] {name:<40} {_fmt(a):>10} -> {_fmt(b):>10} "
+              f"{_delta(a, b):>8}{mark}")
+
+
 def main():
+    if len(sys.argv) == 4 and sys.argv[1] == "--traces":
+        main_traces(sys.argv[2], sys.argv[3])
+        return
     if len(sys.argv) != 3:
         sys.exit(__doc__)
     prev_q, _ = load(sys.argv[1])

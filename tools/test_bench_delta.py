@@ -95,6 +95,31 @@ def main():
         q, _ = bd.load(bm)
         check("BENCHMIN preferred", q == {"q1_agg": 5.0}, f"got {q}")
 
+        # 6. --traces: census counts diff exactly, unchanged ones are
+        #    silent, per-layer metrics are all listed
+        def trace(jobs, nlj, task_s):
+            return {"workload": "retrieval", "seed": 42, "cpus": 4,
+                    "census": {
+                        "kmeans_train": {"jobs": jobs, "stages": jobs,
+                                         "nested_loop_joins": nlj,
+                                         "files_written": 0},
+                        "ann_topk": {"jobs": 4, "stages": 4}},
+                    "metrics": {"spark.jobs": jobs + 4,
+                                "spark.task_s": task_s}}
+        census, metrics = bd.trace_delta(trace(18, 3, 0.5),
+                                         trace(10, 0, 0.25))
+        check("trace census rows are exactly the moved counts",
+              census == [("kmeans_train", "jobs", 18, 10),
+                         ("kmeans_train", "stages", 18, 10),
+                         ("kmeans_train", "nested_loop_joins", 3, 0)],
+              f"got {census}")
+        check("trace metrics list every per-layer metric",
+              metrics == [("spark.jobs", 22, 14),
+                          ("spark.task_s", 0.5, 0.25)], f"got {metrics}")
+        census, _ = bd.trace_delta(trace(18, 3, 0.5), trace(18, 3, 0.7))
+        check("identical counts give no census rows", census == [],
+              f"got {census}")
+
     if failures:
         sys.exit(f"{len(failures)} failing: {', '.join(failures)}")
     print("all bench_delta recovery checks pass")
